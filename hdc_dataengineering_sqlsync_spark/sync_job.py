@@ -16,19 +16,33 @@ Config (JSON)::
       ]
     }
 
-Per table the job: reads source, drift-checks its schema against the target,
-loads the last sync watermark, pulls either the full snapshot or (when
-``version_col`` is set and state exists) only rows past the watermark,
-diffs/merges into the target, atomically swaps the target directory,
-validates row counts, and persists the new watermark. Exactly the
-change-tracking sync loop of an MS-SQL CHANGETABLE-based utility, re-expressed
-over parquet + Spark; the JDBC transport (sources/jdbc.py) slots in at the
-read/write boundary when a database is reachable.
+Per table the job: recovers what an interrupted swap left behind, reads
+source, drift-checks its schema against the target, loads the last sync
+watermark, pulls either the full snapshot or (when ``version_col`` is set and
+state exists) only rows past the watermark, writes the new target to a
+staging directory, swaps it into place, and persists the new watermark.
+Exactly the change-tracking sync loop of an MS-SQL CHANGETABLE-based utility,
+re-expressed over parquet + Spark; the JDBC transport (sources/jdbc.py) slots
+in at the read/write boundary when a database is reachable.
 
-Scale notes: the diff is one PK-keyed shuffle (operators/diff.py); the
-changeset is materialized once (operators/merge.py); the atomic
-directory swap is the local stand-in for a table-format commit
-(Iceberg/Delta snapshot swap) on a real deployment.
+A snapshot sync is one pass. The PK diff (operators/diff.py) emits every
+source row as I, U or =, and every target-only key as D, so its non-D rows are
+the new target: the job writes them straight from the diff join to staging.
+``observe()`` counts, during that same write, the source rows going into the
+join and the I/U/D and written rows coming out of it. The sync validates
+before the swap: a full outer join emits each source row at least once, so
+``rows_written == source_rows`` holds exactly when every source row was
+written once, i.e. the staged table equals the source as a multiset. When it
+fails (a declared PK that repeats in the target multiplies rows), the staging
+directory is deleted and the old target stays as it was.
+
+Scale notes: a snapshot sync scans source and target once each, with one
+PK-keyed shuffle; the counts and the validation ride that job as observed
+metrics, with no re-scan of either table. The incremental path keeps the
+changeset form (operators/merge.py: materialize once, anti-join + union),
+whose cost scales with the delta. The directory swap (rename the old target
+aside, move staging in, delete the old copy) is the local stand-in for a
+table-format commit (Iceberg/Delta snapshot swap) on a real deployment.
 """
 
 from __future__ import annotations
@@ -39,10 +53,10 @@ import os
 import shutil
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from hdc_dataengineering_sqlsync_spark.operators.diff import snapshot_diff
+from hdc_dataengineering_sqlsync_spark.operators.diff import CHANGE_OP, snapshot_diff
 from hdc_dataengineering_sqlsync_spark.operators.merge import (
     materialize_changeset,
     merge_apply,
@@ -68,6 +82,51 @@ class SyncReport:
     drift: SchemaDrift | None = None
     validated: bool = False
     new_version: int | None = None
+    # snapshot validation: passes iff rows_written == source_rows
+    source_rows: int | None = None
+    rows_written: int | None = None
+
+
+def _staging_path(target_path: str) -> str:
+    return target_path.rstrip("/") + "__staging"
+
+
+def _old_path(target_path: str) -> str:
+    return target_path.rstrip("/") + "__old"
+
+
+def _recover_swap(target_path: str) -> None:
+    """Undo what a sync that died mid-swap left behind. An ``__old`` copy
+    beside a missing target means it died between the two renames: the old
+    target goes back. Beside a present target, it died after the new target
+    moved in: the old copy goes. A ``__staging`` directory is a write that
+    was never swapped in."""
+    old, staging = _old_path(target_path), _staging_path(target_path)
+    if os.path.exists(old):
+        if os.path.exists(target_path):
+            shutil.rmtree(old)
+        else:
+            os.replace(old, target_path)
+    if os.path.exists(staging):
+        shutil.rmtree(staging)
+
+
+def _swap_in(staging: str, target_path: str) -> None:
+    """Move a fully written staging directory into place: rename the old
+    target aside, move staging in, then delete the old copy, so a complete
+    table always exists under the target or the ``__old`` name. A failed
+    move puts the old target back; a crash is undone by ``_recover_swap``."""
+    old = _old_path(target_path)
+    if os.path.exists(target_path):
+        os.replace(target_path, old)
+    try:
+        os.replace(staging, target_path)
+    except OSError:
+        if os.path.exists(old):
+            os.replace(old, target_path)
+        raise
+    if os.path.exists(old):
+        shutil.rmtree(old)
 
 
 def _atomic_swap_write(df: DataFrame, target_path: str) -> None:
@@ -75,11 +134,9 @@ def _atomic_swap_write(df: DataFrame, target_path: str) -> None:
     reads the OLD target lazily, so writing over it in place would corrupt
     the input mid-scan; staging + swap is also what makes a crashed sync
     leave the previous target intact."""
-    staging = target_path.rstrip("/") + "__staging"
+    staging = _staging_path(target_path)
     df.write.mode("overwrite").parquet(staging)
-    if os.path.exists(target_path):
-        shutil.rmtree(target_path)
-    os.replace(staging, target_path)
+    _swap_in(staging, target_path)
 
 
 def _current_version(source: DataFrame, version_col: str) -> int:
@@ -87,7 +144,44 @@ def _current_version(source: DataFrame, version_col: str) -> int:
     return int(row["v"] if row["v"] is not None else 0)
 
 
+def _snapshot_sync(
+    cfg: TableSyncConfig, store: StateStore, source: DataFrame, target: DataFrame,
+    new_version: int,
+) -> SyncReport:
+    """One pass: the diff join's non-D rows, in the target's column order,
+    are written to staging, and the counts are observed during that write.
+    Swap only if every source row was written exactly once."""
+    read, diffed = Observation(), Observation()
+    diff = snapshot_diff(
+        source.observe(read, F.count(F.lit(1)).alias("rows")), target, pk=cfg.pk
+    ).observe(
+        diffed,
+        *[F.count(F.when(F.col(CHANGE_OP) == op, 1)).alias(op) for op in "IUD"],
+        F.count(F.when(F.col(CHANGE_OP) != "D", 1)).alias("written"),
+    )
+    staging = _staging_path(cfg.target_path)
+    diff.where(F.col(CHANGE_OP) != "D").select(*target.columns).write.mode(
+        "overwrite"
+    ).parquet(staging)
+    # Adaptive execution drops the source side of the join once it runs
+    # empty, and its observation with it (``Observation.get`` then fails).
+    # Reading the count as 0 is safe: the join writes every source row at
+    # least once, so it validates only if it wrote no rows.
+    source_rows, counts = dict(read._jo.getAsJava()).get("rows", 0), diffed.get
+    validated = counts["written"] == source_rows
+    if validated:
+        _swap_in(staging, cfg.target_path)
+        store.put(SyncState(cfg.name, new_version))
+    else:
+        shutil.rmtree(staging)
+    return SyncReport(
+        cfg.name, "snapshot", {op: counts[op] for op in "IUD" if counts[op]}, None,
+        validated, new_version, source_rows, counts["written"],
+    )
+
+
 def sync_table(spark: SparkSession, cfg: TableSyncConfig, store: StateStore) -> SyncReport:
+    _recover_swap(cfg.target_path)
     source = spark.read.parquet(cfg.source_path)
     state = store.get(cfg.name)
     new_version = _current_version(source, cfg.version_col) if cfg.version_col else (
@@ -100,7 +194,8 @@ def sync_table(spark: SparkSession, cfg: TableSyncConfig, store: StateStore) -> 
         _atomic_swap_write(source, cfg.target_path)
         store.put(SyncState(cfg.name, new_version))
         return SyncReport(
-            cfg.name, "initial_copy", {"I": n}, None, validated=True, new_version=new_version
+            cfg.name, "initial_copy", {"I": n}, None, validated=True, new_version=new_version,
+            source_rows=n,
         )
 
     target = spark.read.parquet(cfg.target_path)
@@ -110,41 +205,27 @@ def sync_table(spark: SparkSession, cfg: TableSyncConfig, store: StateStore) -> 
         # report and stop rather than silently merging mismatched schemas
         return SyncReport(cfg.name, "snapshot", {}, drift, validated=False)
 
-    if cfg.version_col and state is not None:
-        # CDC pull: only rows whose change-version is past the watermark —
-        # the CHANGETABLE(CHANGES ..., @last_version) analog. Deletes are
-        # invisible to a pure version filter (as in real change tracking a
-        # delete arrives as a tombstone row); periodic snapshot diffs catch
-        # any residue.
-        mode = "incremental"
-        delta = source.where(F.col(cfg.version_col).cast("long") > state.last_version)
-        changes = materialize_changeset(
-            snapshot_diff(delta, target.join(delta.select(*cfg.pk), cfg.pk, "left_semi"),
-                          pk=cfg.pk)
-        )
-    else:
-        mode = "snapshot"
-        changes = materialize_changeset(snapshot_diff(source, target, pk=cfg.pk))
+    if not (cfg.version_col and state is not None):
+        return _snapshot_sync(cfg, store, source, target, new_version)
 
+    # CDC pull: only rows whose change-version is past the watermark —
+    # the CHANGETABLE(CHANGES ..., @last_version) analog. Deletes are
+    # invisible to a pure version filter (as in real change tracking a
+    # delete arrives as a tombstone row); periodic snapshot diffs catch
+    # any residue.
+    delta = source.where(F.col(cfg.version_col).cast("long") > state.last_version)
+    changes = materialize_changeset(
+        snapshot_diff(delta, target.join(delta.select(*cfg.pk), cfg.pk, "left_semi"),
+                      pk=cfg.pk)
+    )
     op_counts = {
         r["change_op"]: r["n"]
         for r in changes.groupBy("change_op").agg(F.count(F.lit(1)).alias("n")).collect()
     }
-    merged = merge_apply(target, changes, pk=cfg.pk)
-    _atomic_swap_write(merged, cfg.target_path)
-
-    # post-apply validation (sync_rowcount_validate semantics)
-    if mode == "snapshot":
-        expect = source.agg(F.count(F.lit(1)).alias("n"), F.countDistinct(*cfg.pk).alias("p"))
-        got = spark.read.parquet(cfg.target_path).agg(
-            F.count(F.lit(1)).alias("n"), F.countDistinct(*cfg.pk).alias("p")
-        )
-        validated = expect.collect()[0] == got.collect()[0]
-    else:
-        validated = True  # incremental: full validation deferred to next snapshot diff
-    if validated:
-        store.put(SyncState(cfg.name, new_version))
-    return SyncReport(cfg.name, mode, op_counts, None, validated, new_version)
+    _atomic_swap_write(merge_apply(target, changes, pk=cfg.pk), cfg.target_path)
+    # incremental: full validation deferred to the next snapshot diff
+    store.put(SyncState(cfg.name, new_version))
+    return SyncReport(cfg.name, "incremental", op_counts, None, True, new_version)
 
 
 def run_sync(spark: SparkSession, config: dict) -> list[SyncReport]:

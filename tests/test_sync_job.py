@@ -1,10 +1,12 @@
 """End-to-end tests for the config-driven sync job (sync_job.py) — the
 reference's full lifecycle: initial copy -> corrupted-target repair ->
-idempotent no-op -> CDC incremental pull -> drift refusal."""
+idempotent no-op -> CDC incremental pull -> drift refusal; plus the snapshot
+sync's pre-swap validation, its swap's crash recovery and its job count."""
 
 from __future__ import annotations
 
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -220,6 +222,145 @@ def test_jdbc_merge_live_converges_across_profiles(
 
     merged = read_jdbc(spark, {"url": url, "dbtable": "target", **props})
     assert sorted(map(tuple, merged.collect())) == sorted(map(tuple, src.collect()))
+
+
+def _file_bytes(path):
+    out = {}
+    for root, _, files in os.walk(path):
+        for f in files:
+            with open(os.path.join(root, f), "rb") as fh:
+                out[os.path.relpath(os.path.join(root, f), path)] = fh.read()
+    return out
+
+
+def _write_pair(spark, tmp_path, src_rows, tgt_rows, schema="id long, val string"):
+    src, tgt = str(tmp_path / "src"), str(tmp_path / "tgt")
+    spark.createDataFrame(src_rows, schema).coalesce(1).write.parquet(src)
+    spark.createDataFrame(tgt_rows, schema).coalesce(1).write.parquet(tgt)
+    return TableSyncConfig(name="t", pk=["id"], source_path=src, target_path=tgt)
+
+
+def test_snapshot_sync_refuses_a_declared_key_repeating_on_both_sides(spark, tmp_path):
+    """A key that repeats in the target multiplies the source rows that
+    match it, so rows_written > source_rows: the sync must not swap, must
+    leave the old target byte-identical with no staging directory behind,
+    and must say why in the report."""
+    cfg = _write_pair(
+        spark, tmp_path,
+        [(1, "a"), (1, "b"), (2, "c")],
+        [(1, "a"), (1, "x"), (2, "c"), (3, "d")],
+    )
+    before = _file_bytes(cfg.target_path)
+    store = StateStore(str(tmp_path / "state.json"))
+    r = sync_table(spark, cfg, store)
+    assert r.mode == "snapshot" and not r.validated
+    assert (r.source_rows, r.rows_written) == (3, 5)
+    assert _file_bytes(cfg.target_path) == before
+    assert sorted(os.listdir(tmp_path)) == ["src", "tgt"]
+    assert store.get("t") is None
+
+
+@pytest.mark.parametrize(
+    "src_rows,tgt_rows",
+    [
+        # the source's key repeats, the target's is unique
+        ([(1, "a"), (1, "b"), (2, "c")], [(1, "a"), (2, "z"), (3, "d")]),
+        # an empty source empties the target
+        ([], [(1, "a"), (2, "b")]),
+        # an empty target takes the whole source
+        ([(1, "a"), (2, "b")], []),
+    ],
+)
+def test_snapshot_sync_target_equals_source(spark, tmp_path, src_rows, tgt_rows):
+    cfg = _write_pair(spark, tmp_path, src_rows, tgt_rows)
+    r = sync_table(spark, cfg, StateStore(str(tmp_path / "state.json")))
+    assert r.mode == "snapshot" and r.validated
+    assert r.source_rows == r.rows_written == len(src_rows)
+    got = [tuple(x) for x in spark.read.parquet(cfg.target_path).collect()]
+    assert sorted(got) == sorted(src_rows)
+
+
+class _Crash(BaseException):
+    """Stands for the process dying: no handler in the sync catches it."""
+
+
+@pytest.mark.parametrize(
+    "step,fault,readable_now",
+    [
+        # moving staging in fails: the old target is put back at once
+        ("move_in", OSError, "old"),
+        # the process dies between the two renames: only ``__old`` is left
+        ("move_in", _Crash, None),
+        # the process dies after the new target moved in
+        ("delete_old", _Crash, "new"),
+    ],
+)
+def test_swap_leaves_a_readable_target_when_a_step_fails(
+    spark, tmp_path, monkeypatch, step, fault, readable_now
+):
+    """Inject a failure between the swap's steps (rename the old target
+    aside, move staging in, delete the old copy). The target is readable
+    afterwards, at once or after the next sync recovers the leftovers, and
+    that sync converges."""
+    src_rows, tgt_rows = [(1, "a"), (2, "b"), (3, "c")], [(1, "a"), (2, "x")]
+    cfg = _write_pair(spark, tmp_path, src_rows, tgt_rows)
+    store = StateStore(str(tmp_path / "state.json"))
+    replace, rmtree = os.replace, shutil.rmtree
+
+    def failing_replace(src, dst):
+        if step == "move_in" and src.endswith("__staging"):
+            raise fault("injected")
+        return replace(src, dst)
+
+    def failing_rmtree(path, *args, **kwargs):
+        if step == "delete_old" and path.endswith("__old"):
+            raise fault("injected")
+        return rmtree(path, *args, **kwargs)
+
+    monkeypatch.setattr(os, "replace", failing_replace)
+    monkeypatch.setattr(shutil, "rmtree", failing_rmtree)
+    with pytest.raises(fault):
+        sync_table(spark, cfg, store)
+    monkeypatch.undo()
+
+    def target_rows():
+        return sorted(tuple(x) for x in spark.read.parquet(cfg.target_path).collect())
+
+    expected_now = {"old": sorted(tgt_rows), "new": sorted(src_rows)}
+    if readable_now is None:
+        assert not os.path.exists(cfg.target_path)
+        assert os.path.exists(cfg.target_path + "__old")
+    else:
+        assert target_rows() == expected_now[readable_now]
+
+    # a snapshot sync, not an initial copy: the old target was recovered
+    r = sync_table(spark, cfg, store)
+    assert r.mode == "snapshot" and r.validated and target_rows() == sorted(src_rows)
+    assert sorted(os.listdir(tmp_path)) == ["src", "state.json", "tgt"]
+
+
+def test_snapshot_sync_job_count(spark, tmp_path):
+    """One snapshot sync of a 60-row table with 12 inserts, 16 updates and
+    1 delete ran 15 Spark jobs through the old changeset path (diff
+    checkpoint, op-count collect, merge write, two validation re-scans) and
+    runs 5 through the one-pass path: at most half is asserted."""
+    schema = "id long, val double"
+    cfg = _write_pair(
+        spark, tmp_path,
+        [(k, float(k)) for k in range(1, 61)],
+        [(k, float(k) + (k % 3 == 0)) for k in range(1, 61) if k % 5] + [(999, 1.0)],
+        schema,
+    )
+    sc = spark.sparkContext
+    group = f"sync-job-count-{os.getpid()}"
+    sc.setJobGroup(group, group)
+    try:
+        r = sync_table(spark, cfg, StateStore(str(tmp_path / "state.json")))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job starts reach the tracker
+    assert r.validated and r.op_counts == {"I": 12, "U": 16, "D": 1}
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 15 // 2
 
 
 def test_run_sync_multi_table(spark, sf_dir, tmp_path):
